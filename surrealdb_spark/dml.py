@@ -9,22 +9,27 @@ changefeed) re-expressed as set-oriented DataFrame writes:
   * field type/ASSERT     → schema casts + validation predicates (errors
                             collected set-wide, matching SCHEMAFULL writes)
   * DEFAULT / VALUE       → coalesce / computed columns
-  * store                 → parquet append/overwrite (Delta-less MERGE
-                            emulation: anti-join + union)
+  * store                 → a new parquet generation per write
+                            (Delta-less MERGE: anti-join + union)
   * changefeed            → per-mutation change rows under <table>/_changes
                             (consumed by streaming.changefeed — the
                             Delta-CDF stand-in)
   * events (DEFINE EVENT) → post-write Python hooks
 
-Tables live under <root>/<table>/data (parquet) so the change log can sit
-beside them.  At scale both dirs are partitioned parquet; the id-collision
-anti-joins shuffle on the id column only.
+Generations <root>/<table>/data_g<N> are immutable; <root>/_manifest.json
+(the Delta-log stand-in) names each table's live one and, for VERSIONed
+tables, the one each versionstamp reads.  A write commits by an atomic
+manifest rename, so a killed write never becomes visible; VERSION reads,
+transaction savepoints and REMOVE TABLE are manifest edits, and each commit
+deletes the generations nothing references.
 """
 
 from __future__ import annotations
 
+import copy
 import json
 import os
+import shutil
 import time
 from collections.abc import Callable
 from dataclasses import dataclass, field
@@ -76,11 +81,11 @@ class TableDef:
     id_col: str = "id"
     fields: list[FieldDef] = field(default_factory=list)
     changefeed: bool = False
-    # SELECT ... VERSION <ts> support: snapshot the table before every
-    # mutation (the Delta-less stand-in for versioned reads — the reference
-    # needs its SurrealKV backend for this too, exec/operators/
-    # version_scope.rs).  Off by default: full-copy snapshots are only
-    # sane for modest tables; the scale path is Delta/Iceberg time travel.
+    # SELECT ... VERSION <ts> support: every write records the generation
+    # it replaced under a versionstamp in the manifest, and those
+    # generations are kept (the reference needs its SurrealKV backend for
+    # this too, exec/operators/version_scope.rs).  Off by default: retained
+    # generations are never collected.
     versioned: bool = False
     # DEFINE EVENT hooks: fn(action, df_of_affected_rows) — core/src/doc/event.rs
     events: list[Callable[[str, DataFrame], None]] = field(default_factory=list)
@@ -101,12 +106,24 @@ class MutationError(Exception):
 
 
 class Database:
-    """A database directory: one subdir per table (<root>/<tbl>/data)."""
+    """A database directory: per table its ``data_g<N>`` generations and
+    ``_changes`` log, plus ``_manifest.json`` = ``{"next": N, "tables": {tbl:
+    {"gen": live, "prev": replaced, "versions": {stamp: gen}}}}``.  ``next``
+    numbers generations root-wide: none repeats, even across REMOVE TABLE
+    and rollback."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root.rstrip("/")
         self.tables: dict[str, TableDef] = {}
+        os.makedirs(self.root, exist_ok=True)
+        try:
+            with open(f"{self.root}/_manifest.json") as fh:
+                self._manifest = json.load(fh)
+        except FileNotFoundError:
+            self._manifest = {"next": 1, "tables": {}}
+        # open savepoints, oldest first; each pins what it references
+        self._savepoints: list[dict] = []
 
     # -- catalog ------------------------------------------------------------
 
@@ -116,76 +133,129 @@ class Database:
             # versioned = true — VERSION clause snapshots)
             td.versioned = True
         self.tables[td.name] = td
-        os.makedirs(self._data(td.name), exist_ok=True)
+
+    def drop(self, tbl: str) -> None:
+        """REMOVE TABLE (KeyError if undefined): its files go at this
+        commit's GC unless an open savepoint pins them."""
+        del self.tables[tbl]
+        self._manifest["tables"].pop(tbl, None)
+        self._commit_manifest()
 
     def _data(self, tbl: str) -> str:
-        """Current-generation data dir.
-
-        Mutations rewrite the table into a FRESH ``data_g<N>`` dir (see
-        `_overwrite`) instead of truncating the dir readers hold lazy plans
-        over — so no full-table localCheckpoint is needed to guard the
-        self-overwrite, and a reader of generation N stays valid across
-        later mutations (MVCC-style; old generations are retained for the
-        Database's lifetime — these are short-lived per-connection dirs).
-        The pointer is the highest-numbered dir ON DISK, never in-memory
-        state, so transaction backup/restore (copytree of the db root) and
-        REMOVE TABLE (rmtree) carry it for free."""
-        base = f"{self.root}/{tbl}"
-        try:
-            gens = [d for d in os.listdir(base) if d.startswith("data_g")]
-        except FileNotFoundError:
-            gens = []
-        if not gens:
-            return f"{base}/data"
-        return f"{base}/{max(gens, key=lambda d: int(d[6:]))}"
-
-    def _next_data(self, tbl: str) -> str:
-        cur = self._data(tbl)
-        n = 0 if cur.endswith("/data") else int(cur.rsplit("data_g", 1)[1])
-        return f"{self.root}/{tbl}/data_g{n + 1}"
+        """The live generation's dir, from the manifest (``data_g0``, which
+        never exists, for a table with no committed generation)."""
+        ent = self._manifest["tables"].get(tbl)
+        return f"{self.root}/{tbl}/data_g{ent['gen'] if ent else 0}"
 
     def _changes(self, tbl: str) -> str:
         return f"{self.root}/{tbl}/_changes"
 
-    def _versions(self, tbl: str) -> str:
-        return f"{self.root}/{tbl}/_versions"
-
-    def _snapshot(self, tbl: str) -> None:
-        """Archive the current table state under a versionstamp."""
-        td = self.tables[tbl]
-        if not td.versioned or not self._exists(tbl):
-            return
-        import shutil
-
-        vs = time.time_ns() // 1_000_000
-        dst = f"{self._versions(tbl)}/{vs}"
-        while os.path.exists(dst):  # same-ms mutations
-            vs += 1
-            dst = f"{self._versions(tbl)}/{vs}"
-        shutil.copytree(self._data(tbl), dst)
-
     def table_at(self, tbl: str, versionstamp: int) -> DataFrame:
-        """SELECT ... VERSION — the table as of ``versionstamp`` (ms).
-
-        Reads the newest snapshot taken AFTER that instant (snapshots
-        capture the pre-mutation state); if none, the live table."""
-        vdir = self._versions(tbl)
-        if os.path.isdir(vdir):
-            stamps = sorted(int(d) for d in os.listdir(vdir))
-            later = [v for v in stamps if v > versionstamp]
-            if later:
-                return self.spark.read.parquet(f"{vdir}/{later[0]}")
+        """SELECT ... VERSION — the table as of ``versionstamp`` (ms): the
+        generation the first later write replaced, else the live table."""
+        versions = self._manifest["tables"].get(tbl, {}).get("versions", {})
+        later = [int(v) for v in versions if int(v) > versionstamp]
+        if later:
+            gen = versions[str(min(later))]
+            return self.spark.read.parquet(f"{self.root}/{tbl}/data_g{gen}")
         return self.table(tbl)
 
     def table(self, tbl: str) -> DataFrame:
-        path = self._data(tbl)
-        if not any(f.endswith(".parquet") for f in os.listdir(path)):
+        if not self._exists(tbl):
             raise MutationError(f"table {tbl} is empty — no schema to read")
-        return self.spark.read.parquet(path)
+        return self.spark.read.parquet(self._data(tbl))
 
     def _exists(self, tbl: str) -> bool:
-        path = self._data(tbl)
-        return os.path.isdir(path) and any(f.endswith(".parquet") for f in os.listdir(path))
+        return tbl in self._manifest["tables"]
+
+    # -- generations, manifest commits, savepoints ---------------------------
+
+    def _write(self, tbl: str, df: DataFrame, append: bool = False) -> None:
+        """Write ``df`` as a new generation of ``tbl`` and commit it.
+
+        ``append`` hard-links the live generation's parquet files into the
+        new dir first, so only the new rows are written.  ``df`` may read
+        the live generation lazily, and a reader of it stays valid across
+        this write: GC keeps the generation before the live one."""
+        n = self._manifest["next"]
+        while os.path.exists(f"{self.root}/{tbl}/data_g{n}"):
+            n += 1  # orphan of a killed write; the next GC removes it
+        self._manifest["next"] = n + 1
+        dst = f"{self.root}/{tbl}/data_g{n}"
+        try:
+            if append and self._exists(tbl):
+                src = self._data(tbl)
+                os.makedirs(dst)
+                for f in os.listdir(src):
+                    if f.endswith(".parquet"):
+                        os.link(f"{src}/{f}", f"{dst}/{f}")
+            self._devoid(df).write.mode(
+                "append" if append else "overwrite").parquet(dst)
+        except BaseException:
+            shutil.rmtree(dst, ignore_errors=True)
+            raise
+        old = self._manifest["tables"].get(tbl, {"gen": None, "versions": {}})
+        versions = old["versions"]
+        if old["gen"] and getattr(self.tables.get(tbl), "versioned", False):
+            vs = time.time_ns() // 1_000_000
+            while str(vs) in versions:  # same-ms writes
+                vs += 1
+            versions[str(vs)] = old["gen"]
+        self._manifest["tables"][tbl] = {
+            "gen": n, "prev": old["gen"], "versions": versions}
+        self._commit_manifest()
+
+    def _commit_manifest(self) -> None:
+        """Atomically replace the manifest, then delete every generation
+        that neither it nor an open savepoint references."""
+        path = f"{self.root}/_manifest.json"
+        with open(path + ".tmp", "w") as fh:
+            json.dump(self._manifest, fh)
+        os.replace(path + ".tmp", path)
+        keep: dict[str, set] = {}
+        for tables in [self._manifest["tables"]] + [
+                sp["manifest"] for sp in self._savepoints]:
+            for tbl, ent in tables.items():
+                keep.setdefault(tbl, set()).update(
+                    [ent["gen"], ent["prev"], *ent["versions"].values()])
+        for tbl in os.listdir(self.root):
+            base = f"{self.root}/{tbl}"
+            for d in os.listdir(base) if os.path.isdir(base) else ():
+                # a removed table's change log goes with its generations
+                if (int(d[6:]) not in keep.get(tbl, ()) if d.startswith("data_g")
+                        else d == "_changes" and tbl not in keep):
+                    shutil.rmtree(f"{base}/{d}", ignore_errors=True)
+
+    def savepoint(self) -> int:
+        """Pin the manifest, table set and change-log file names in memory;
+        returns the depth, the token for rollback/release."""
+        changes = {t: set(os.listdir(self._changes(t)))
+                   for t in self._manifest["tables"]
+                   if os.path.isdir(self._changes(t))}
+        self._savepoints.append({
+            "manifest": copy.deepcopy(self._manifest["tables"]),
+            "tables": dict(self.tables), "changes": changes})
+        return len(self._savepoints) - 1
+
+    def rollback(self, depth: int) -> None:
+        """Restore savepoint ``depth`` and close it and later ones; change
+        files written since are deleted."""
+        sp = self._savepoints[depth]
+        del self._savepoints[depth:]
+        for tbl in sp["manifest"]:
+            cf = self._changes(tbl)
+            now = set(os.listdir(cf)) if os.path.isdir(cf) else set()
+            for f in now - sp["changes"].get(tbl, set()):
+                os.remove(f"{cf}/{f}")
+        self._manifest["tables"] = sp["manifest"]
+        self.tables.clear()
+        self.tables.update(sp["tables"])
+        self._commit_manifest()
+
+    def release(self, depth: int) -> None:
+        """Close savepoint ``depth`` and later ones, keeping the writes."""
+        del self._savepoints[depth:]
+        self._commit_manifest()
 
     # -- field pipeline (doc/field.rs process_table_fields) ------------------
 
@@ -557,9 +627,9 @@ class Database:
                     or dict(cur.dtypes) != dict(records.dtypes):
                 cur, records = self._harmonize(tbl, cur, records)
                 merged = cur.unionByName(records, allowMissingColumns=True)
-                self._overwrite(tbl, merged)
+                self._write(tbl, merged)
                 return
-        self._devoid(records).write.mode("append").parquet(self._data(tbl))
+        self._write(tbl, records, append=True)
 
     def create(self, tbl: str, records: DataFrame) -> DataFrame:
         """CREATE — insert new records, ERROR if an id already exists
@@ -574,7 +644,6 @@ class Database:
             if n:
                 raise MutationError(f"CREATE: {n} record id(s) already exist in {tbl}")
         self._check_unique(tbl, records)
-        self._snapshot(tbl)
         records = records.localCheckpoint(eager=True)
         self._append(tbl, records)
         self._post_write(tbl, "CREATE", records)
@@ -613,7 +682,7 @@ class Database:
             merged = untouched.unionByName(updated).unionByName(fresh)
             touched = updated.unionByName(fresh).localCheckpoint(eager=True)
             self._check_unique_final(tbl, merged)
-        self._overwrite(tbl, merged)
+        self._write(tbl, merged)
         self._post_write(tbl, "UPDATE", touched, before=dup_before)
         return touched
 
@@ -667,7 +736,7 @@ class Database:
         untouched, after_m = self._harmonize(tbl, untouched, after)
         merged = untouched.unionByName(after_m, allowMissingColumns=True)
         self._check_unique_final(tbl, merged)
-        self._overwrite(tbl, merged)
+        self._write(tbl, merged)
         self._post_write(tbl, "UPDATE", after, before=before)
         if capture is not None:
             capture["before"], capture["after"] = before, after
@@ -705,7 +774,7 @@ class Database:
             replaced, allowMissingColumns=True
         ).unionByName(fresh, allowMissingColumns=True)
         self._check_unique_final(tbl, merged)
-        self._overwrite(tbl, merged)
+        self._write(tbl, merged)
         self._post_write(tbl, "UPDATE", replaced, before=rep_before)
         self._post_write(tbl, "CREATE", fresh)
         return replaced.unionByName(fresh)
@@ -725,7 +794,7 @@ class Database:
         cond = where if where is not None else F.lit(True)
         doomed = current.filter(cond).localCheckpoint(eager=True)
         kept = current.filter(~F.coalesce(cond, F.lit(False)))
-        self._overwrite(tbl, kept)
+        self._write(tbl, kept)
         self._post_write(tbl, "DELETE", doomed, before=doomed)
         if capture is not None:
             capture["before"] = doomed
@@ -776,24 +845,6 @@ class Database:
                 df = df.withColumn(c, F.col(c).cast(tgt))
         return df
 
-    def _overwrite(self, tbl: str, df: DataFrame) -> None:
-        # Write the new state into a FRESH generation dir and let _data's
-        # dir scan advance the pointer (r13).  The plan may read the current
-        # generation lazily while writing the next one — no self-overwrite,
-        # so the old full-table localCheckpoint staging is gone (at scale it
-        # materialized the ENTIRE table in executor memory per mutation;
-        # now a mutation costs exactly one parquet write of the new state).
-        self._snapshot(tbl)
-        dst = self._next_data(tbl)
-        try:
-            self._devoid(df).write.mode("overwrite").parquet(dst)
-        except BaseException:
-            # never leave a half-written dir as the newest generation
-            import shutil
-
-            shutil.rmtree(dst, ignore_errors=True)
-            raise
-
     @staticmethod
     def _returning(td: TableDef, before: DataFrame, after: DataFrame, mode: str) -> DataFrame:
         if mode == "NONE":
@@ -829,21 +880,6 @@ def diff_patch(before: dict, after: dict) -> list[dict]:
     return ops
 
 
-def apply_patch(doc: dict, ops: list[dict]) -> dict:
-    """value::patch — apply JSON-Patch ops."""
-    out = dict(doc)
-    for op in ops:
-        key = op["path"].lstrip("/")
-        if op["op"] == "remove":
-            out.pop(key, None)
-        else:
-            out[key] = op["value"]
-    return out
-
-
-_ = json  # retained for DIFF consumers
-
-
 class ViewDef:
     """DEFINE TABLE <name> AS SELECT — materialized/aggregated views
     (core/src/catalog/view.rs:12-36: Materialized / Aggregated / Select).
@@ -867,8 +903,7 @@ def define_view(db: Database, view: ViewDef) -> None:
     db.define_table(TableDef(view.name, id_col="id"))
 
     def maintain(_action: str, _rows: DataFrame) -> None:
-        content = view.builder(db.table(view.source)).localCheckpoint(eager=True)
-        content.write.mode("overwrite").parquet(db._data(view.name))
+        db._write(view.name, view.builder(db.table(view.source)))
 
     db.tables[view.source].events.append(maintain)
     if db._exists(view.source):

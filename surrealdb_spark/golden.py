@@ -19,7 +19,6 @@ statements still get results.
 from __future__ import annotations
 
 import math
-import os
 import re
 import tomllib
 from dataclasses import dataclass, field
@@ -723,15 +722,14 @@ def _replay_dataset(spark, db, runner, stmts: list[str]) -> None:
         runner.run(s)
 
 
-def _attach_tables(db, root: str) -> None:
-    """Register every on-disk table dir of a materialized dataset (the
+def _attach_tables(db) -> None:
+    """Register every table in a materialized dataset's manifest (the
     dataset may have created tables — incl. RELATE edge tables — without
     DEFINE)."""
     from surrealdb_spark.dml import TableDef
 
-    for name in sorted(os.listdir(root)):
-        if os.path.isdir(os.path.join(root, name, "data")) \
-                and name not in db.tables:
+    for name in sorted(db._manifest["tables"]):
+        if name not in db.tables:
             db.define_table(TableDef(name))
 
 
@@ -775,7 +773,7 @@ def _prepare_imports(spark: SparkSession, test_path: str,
     else:
         root = tempfile.mkdtemp(prefix="golden_")
     db = Database(spark, root)
-    _attach_tables(db, root)
+    _attach_tables(db)
     runner = StatementRunner(spark, db)
     for ds_path, in entries:
         entry = _materialize_dataset(spark, ds_path)
@@ -1067,15 +1065,15 @@ def _run_statement_file(spark: SparkSession, stmts: list[str],
                                           stmts=runner)
                 # each statement is atomic in the reference: a failing
                 # FOR/IF rolls its writes back (exec statement atomicity)
-                bk = runner._snapshot_root()
+                sp = runner.savepoint()
                 try:
                     # DEFINE PARAM bindings are in scope for scripts too
                     a = script.run(
                         s, **{**runner.params_defined, **bindings}).value
                 except Exception:
-                    runner._restore_root(bk)
+                    runner.rollback(sp)
                     raise
-                runner._drop_backup(bk)
+                runner.release(sp)
                 if hasattr(a, "columns"):  # DataFrame statement result
                     a = _df_value(a, s)
             elif word in _STMT_WORDS:

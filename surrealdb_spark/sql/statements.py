@@ -2751,47 +2751,28 @@ class StatementRunner:
             params[slot] = rows
             txt = txt[:start] + f"${slot}" + txt[i + 1:]
 
-    def _snapshot_root(self) -> str:
-        """Copy the database root for transaction rollback (OLTP-scoped:
-        BEGIN/COMMIT batches are interactive-size, not the analytics
-        path)."""
-        import shutil
-        import tempfile
+    def savepoint(self) -> tuple:
+        """Savepoint for BEGIN or one statement's atomicity: the database's
+        plus this runner's table catalog and DEFINE PARAMs (a failed FOR's
+        CREATEs leave no table behind, break_in_function.surql)."""
+        import copy
 
-        dst = tempfile.mkdtemp(prefix="txbk_")
-        shutil.rmtree(dst)
-        shutil.copytree(self.db.root, dst)
-        # a rolled-back statement also rolls back the table definitions it
-        # implicitly created (exec statement atomicity — a failed FOR's
-        # CREATEs leave no table behind, break_in_function.surql)
-        if not hasattr(self, "_snap_meta"):
-            self._snap_meta: dict[str, set] = {}
-        self._snap_meta[dst] = set(self.db.tables)
-        return dst
+        return (self.db.savepoint(), copy.deepcopy(
+            (self.meta["tables"], self.obj_info["tables"], self.table_meta)),
+            dict(self.params_defined))
 
-    def _restore_root(self, backup: str | None) -> None:
-        import shutil
+    def rollback(self, sp: tuple) -> None:
+        depth, (meta_t, info_t, table_meta), params = sp
+        added = set(self.db.tables)
+        self.db.rollback(depth)
+        for tb in added - set(self.db.tables):
+            self.catalog._cache.pop(tb, None)
+            getattr(self.catalog, "registered", set()).discard(tb)
+        self.meta["tables"], self.obj_info["tables"] = meta_t, info_t
+        self.table_meta, self.params_defined = table_meta, params
 
-        if not backup:
-            return
-        shutil.rmtree(self.db.root, ignore_errors=True)
-        shutil.copytree(backup, self.db.root)
-        shutil.rmtree(backup, ignore_errors=True)
-        pre = getattr(self, "_snap_meta", {}).pop(backup, None)
-        if pre is not None:
-            for tb in [t for t in self.db.tables if t not in pre]:
-                self.db.tables.pop(tb, None)
-                self.meta.get("tables", {}).pop(tb, None)
-                self.catalog._cache.pop(tb, None)
-                getattr(self.catalog, "registered", set()).discard(tb)
-        self._tx_backup = None
-
-    @staticmethod
-    def _drop_backup(backup: str | None) -> None:
-        import shutil
-
-        if backup:
-            shutil.rmtree(backup, ignore_errors=True)
+    def release(self, sp: tuple) -> None:
+        self.db.release(sp[0])
 
     def _run_main(self, text: str, params: dict | None = None) -> DataFrame | None:
         from surrealdb_spark.sql.compiler import compile_select
@@ -4060,14 +4041,11 @@ class StatementRunner:
                 raise ValueError(
                     f"Cannot remove table '{name}': view(s) "
                     f"{', '.join(deps)} are defined from it")
-            del self.db.tables[name]
-            self.view_defs.pop(name, None)
-            self.catalog._cache.pop(name, None)
-            import shutil
-
             # the table's rows, indexes and field meta go with it —
             # a later re-DEFINE starts empty (statements/remove/table.rs)
-            shutil.rmtree(f"{self.db.root}/{name}", ignore_errors=True)
+            self.db.drop(name)
+            self.view_defs.pop(name, None)
+            self.catalog._cache.pop(name, None)
             for ixn in [n for n, d in self.index_defs.items()
                         if d.table == name]:
                 self.index_defs.pop(ixn, None)
@@ -5756,10 +5734,7 @@ class StatementRunner:
             if stmt.word == "BEGIN":
                 self._tx_open = True
                 self._tx_failed = None
-                self._tx_backup = self._snapshot_root()
-                # catalog params roll back with the data (DEFINE PARAM
-                # inside a cancelled tx is undone — param/cancel_commit)
-                self._tx_params = dict(self.params_defined)
+                self._tx_sp = self.savepoint()
             else:
                 if not getattr(self, "_tx_open", False):
                     raise ValueError(
@@ -5767,18 +5742,14 @@ class StatementRunner:
                         "starting a transaction")
                 self._tx_open = False
                 if stmt.word == "CANCEL":
-                    self._restore_root(self._tx_backup)
-                    self.params_defined = dict(
-                        getattr(self, "_tx_params", self.params_defined))
+                    self.rollback(self._tx_sp)
                     return None
                 if getattr(self, "_tx_failed", None):
-                    self._restore_root(self._tx_backup)
-                    self.params_defined = dict(
-                        getattr(self, "_tx_params", self.params_defined))
+                    self.rollback(self._tx_sp)
                     raise ValueError(
                         "Cannot COMMIT: the transaction was aborted due "
                         "to a prior error")
-                self._drop_backup(self._tx_backup)
+                self.release(self._tx_sp)
             return None
         if isinstance(stmt, DefineMiscStmt):
             return self._define_misc(stmt, params)
@@ -7583,7 +7554,7 @@ class StatementRunner:
                             F.col(f_).isNotNull(),
                             F.array().cast(target)).otherwise(
                             F.lit(None).cast(target))
-                        self.db._overwrite(
+                        self.db._write(
                             tbl, frame.withColumn(f_, typed))
                         dtypes = dict(self.db.table(tbl).dtypes)
                         dt = dtypes.get(f_, "")

@@ -112,30 +112,22 @@ class IncrementalAggView:
 def define_incremental_view(db: Database, view: IncrementalAggView) -> None:
     """Register the view; mutations on the source merge deltas into state."""
     db.define_table(TableDef(view.name, id_col=view.keys[0]))
-    state_dir = f"{db.root}/{view.name}/_state"
-
-    def _read_state() -> DataFrame:
-        return db.spark.read.parquet(state_dir)
+    # the partial-aggregate state is a generation-managed table of its own
+    state_tbl = f"{view.name}__state"
 
     def _write_state(state: DataFrame) -> None:
-        state.localCheckpoint(eager=True).write.mode("overwrite").parquet(state_dir)
-        view.finalize(_read_state()).write.mode("overwrite").parquet(
-            db._data(view.name)
-        )
+        db._write(state_tbl, state)
+        db._write(view.name, view.finalize(db.table(state_tbl)))
 
     def _full_build() -> None:
-        src = db.table(view.source) if db._exists(view.source) else None
-        if src is None:
-            return
-        _write_state(view.build_state(src))
+        if db._exists(view.source):
+            _write_state(view.build_state(db.table(view.source)))
 
     def maintain(action: str, rows: DataFrame, before: DataFrame | None = None) -> None:
-        import os
-
-        if not os.path.exists(state_dir):
+        if not db._exists(state_tbl):
             _full_build()
             return
-        state = _read_state()
+        state = db.table(state_tbl)
         if action == "UPDATE":
             # pre-image unavailable → the touched rows' old partials are
             # unknown: recompute only the affected groups from the source

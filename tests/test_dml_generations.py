@@ -1,18 +1,26 @@
-"""Generation-dir table rewrites (r13 optimization).
+"""Immutable table generations under one manifest.
 
-`Database._overwrite` writes each mutation's result into a fresh
-``data_g<N>`` dir instead of checkpointing the whole table and truncating
-the dir in place.  Contract under test:
+Every write lands in a fresh ``data_g<N>`` dir and commits by atomically
+replacing ``<root>/_manifest.json``, which names each table's live
+generation (and, for VERSIONed tables, the generation each versionstamp
+reads).  Contract under test:
 
-- the current-generation pointer is derived from the dirs on disk (so
-  transaction copytree backup/restore and REMOVE TABLE rmtree carry it);
+- the live-generation pointer is the manifest's, never a dir scan: an
+  uncommitted dir left by a killed write is invisible, and the next
+  commit's GC deletes it;
 - a lazy reader taken BEFORE a mutation still sees the old rows after it
-  (read stability — the property the old full-table localCheckpoint
-  existed to protect);
-- repeated mutations keep advancing generations and reading back correctly.
+  (GC keeps the generation before the live one);
+- repeated mutations keep advancing generations and reading back
+  correctly; appends hard-link the live files instead of rewriting them;
+- disk stays bounded: after N writes only the live and previous
+  generations remain, plus what an open savepoint or a VERSION entry pins;
+- REMOVE TABLE drops the manifest entry; a re-DEFINE starts empty and
+  generation numbers keep counting up.
 """
 
+import json
 import os
+import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -38,6 +46,11 @@ def _db(spark, tmp_path):
     return db
 
 
+def _gens(db, tbl):
+    base = f"{db.root}/{tbl}"
+    return sorted(d for d in os.listdir(base) if d.startswith("data_g"))
+
+
 def test_reader_taken_before_mutation_is_stable(spark, tmp_path):
     db = _db(spark, tmp_path)
     snapshot = db.table("t")  # lazy plan over the pre-mutation generation
@@ -48,30 +61,35 @@ def test_reader_taken_before_mutation_is_stable(spark, tmp_path):
 
 def test_generations_advance_and_read_back(spark, tmp_path):
     db = _db(spark, tmp_path)
-    assert db._data("t").endswith("/data")  # create() appends in place
+    assert db._data("t").endswith("/t/data_g1")  # create() commits g1
     db.update("t", {"v": F.col("v") + 10})
-    g1 = db._data("t")
-    assert g1.endswith("data_g1")
+    assert db._data("t").endswith("data_g2")
     db.delete("t", F.col("v") == 12)
-    g2 = db._data("t")
-    assert g2.endswith("data_g2")
+    g3 = db._data("t")
+    assert g3.endswith("data_g3")
     assert sorted(r.v for r in db.table("t").collect()) == [11, 13]
-    # both old generations still on disk (readers may hold plans on them)
-    base = os.path.dirname(g2)
-    assert os.path.isdir(f"{base}/data") and os.path.isdir(g1)
+    with open(f"{db.root}/_manifest.json") as fh:
+        assert json.load(fh)["tables"]["t"]["gen"] == 3
+    # GC kept the live generation and the one before it
+    assert _gens(db, "t") == ["data_g2", "data_g3"]
+    # an append links the live files into the next generation
+    db.create("t", spark.createDataFrame([("t:4", 4)], "id string, v int"))
+    g4 = db._data("t")
+    old = [f for f in os.listdir(g3) if f.endswith(".parquet")]
+    assert old and all(os.path.samefile(f"{g3}/{f}", f"{g4}/{f}") for f in old)
+    assert sorted(r.v for r in db.table("t").collect()) == [4, 11, 13]
 
 
 def test_remove_and_redefine_resets_generations(spark, tmp_path):
-    import shutil
-
     db = _db(spark, tmp_path)
     db.update("t", {"v": F.lit(0)})
-    assert db._data("t").endswith("data_g1")
-    shutil.rmtree(f"{db.root}/t")  # REMOVE TABLE path (statements.py)
+    assert db._data("t").endswith("data_g2")
+    db.drop("t")  # REMOVE TABLE path (statements.py)
+    assert "t" not in db.tables and _gens(db, "t") == []
     db.define_table(TableDef("t"))
-    assert db._data("t").endswith("/data")
     assert not db._exists("t")
     db.create("t", spark.createDataFrame([("t:9", 9)], "id string, v int"))
+    assert db._data("t").endswith("data_g3")  # numbers never repeat
     assert [r.v for r in db.table("t").collect()] == [9]
 
 
@@ -88,3 +106,49 @@ def test_upsert_and_insert_roundtrip_across_generations(spark, tmp_path):
         spark.createDataFrame([("t:5", 5)], "id string, v int"),
     )
     assert sorted(r.v for r in db.table("t").collect()) == [1, 3, 5, 20, 40]
+
+
+def test_killed_write_is_invisible_and_collected(spark, tmp_path):
+    db = _db(spark, tmp_path)
+    # a write killed before its manifest commit: a newer dir, no _SUCCESS
+    orphan = f"{db.root}/t/data_g2"
+    db.table("t").filter(F.col("v") > 1).write.parquet(orphan)
+    os.remove(f"{orphan}/_SUCCESS")
+    db = Database(spark, str(tmp_path))  # reopen
+    assert db._data("t").endswith("data_g1")
+    assert sorted(r.v for r in db.table("t").collect()) == [1, 2, 3]
+    db.define_table(TableDef("t"))
+    db.update("t", {"v": F.col("v") * 10})
+    assert not os.path.exists(orphan)
+    assert db._data("t").endswith("data_g3")
+    assert sorted(r.v for r in db.table("t").collect()) == [10, 20, 30]
+
+
+def test_disk_bounded_across_writes_and_savepoints(spark, tmp_path):
+    db = _db(spark, tmp_path)
+    for _ in range(20):
+        db.update("t", {"v": F.col("v") + 1})
+    assert len(_gens(db, "t")) <= 2
+    assert sorted(r.v for r in db.table("t").collect()) == [21, 22, 23]
+    sp = db.savepoint()
+    pinned = db._data("t")
+    for _ in range(3):
+        db.update("t", {"v": F.col("v") + 1})
+    assert os.path.isdir(pinned)  # an open savepoint pins its generation
+    db.release(sp)
+    assert not os.path.exists(pinned) and len(_gens(db, "t")) <= 2
+    assert sorted(r.v for r in db.table("t").collect()) == [24, 25, 26]
+
+
+def test_versioned_table_keeps_every_version(spark, tmp_path):
+    db = Database(spark, str(tmp_path))
+    db.define_table(TableDef("vt", versioned=True))
+    db.create("vt", spark.createDataFrame([("vt:1", 0)], "id string, v int"))
+    marks = []
+    for i in range(1, 6):
+        marks.append(time.time_ns() // 1_000_000)
+        time.sleep(0.01)
+        db.update("vt", {"v": F.lit(i)})
+        time.sleep(0.01)
+    assert [db.table_at("vt", m).first().v for m in marks] == [0, 1, 2, 3, 4]
+    assert db.table("vt").first().v == 5
