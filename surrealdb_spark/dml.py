@@ -37,6 +37,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from surrealdb_spark.session import local_frame
+
 
 @dataclass
 class FieldDef:
@@ -110,7 +112,17 @@ class Database:
     ``_changes`` log, plus ``_manifest.json`` = ``{"next": N, "tables": {tbl:
     {"gen": live, "prev": replaced, "versions": {stamp: gen}}}}``.  ``next``
     numbers generations root-wide: none repeats, even across REMOVE TABLE
-    and rollback."""
+    and rollback.
+
+    Scan cache: ``table`` and ``table_at`` return one lazy
+    ``spark.read.parquet`` frame per generation dir (``_scans``), so the
+    footer-reading schema job runs once per generation, not once per call.
+    No entry goes stale, as a generation number never repeats and a
+    committed generation is never rewritten; GC drops an entry with its
+    dir, so the cache holds no more than the manifest and the open
+    savepoints reference.  Repeated calls return the SAME frame: a join of
+    two of them must name columns by string (``on="id"``) or alias one
+    side, exactly as for ``Catalog`` fixture scans."""
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -124,6 +136,8 @@ class Database:
             self._manifest = {"next": 1, "tables": {}}
         # open savepoints, oldest first; each pins what it references
         self._savepoints: list[dict] = []
+        # generation dir → its lazy scan (see the class docstring)
+        self._scans: dict[str, DataFrame] = {}
 
     # -- catalog ------------------------------------------------------------
 
@@ -157,13 +171,19 @@ class Database:
         later = [int(v) for v in versions if int(v) > versionstamp]
         if later:
             gen = versions[str(min(later))]
-            return self.spark.read.parquet(f"{self.root}/{tbl}/data_g{gen}")
+            return self._scan(f"{self.root}/{tbl}/data_g{gen}")
         return self.table(tbl)
 
     def table(self, tbl: str) -> DataFrame:
         if not self._exists(tbl):
             raise MutationError(f"table {tbl} is empty — no schema to read")
-        return self.spark.read.parquet(self._data(tbl))
+        return self._scan(self._data(tbl))
+
+    def _scan(self, path: str) -> DataFrame:
+        df = self._scans.get(path)
+        if df is None:
+            df = self._scans[path] = self.spark.read.parquet(path)
+        return df
 
     def _exists(self, tbl: str) -> bool:
         return tbl in self._manifest["tables"]
@@ -225,6 +245,7 @@ class Database:
                 if (int(d[6:]) not in keep.get(tbl, ()) if d.startswith("data_g")
                         else d == "_changes" and tbl not in keep):
                     shutil.rmtree(f"{base}/{d}", ignore_errors=True)
+                    self._scans.pop(f"{base}/{d}", None)
 
     def savepoint(self) -> int:
         """Pin the manifest, table set and change-log file names in memory;
@@ -700,7 +721,7 @@ class Database:
         if not self._exists(tbl):
             # UPDATE only touches existing records (update.rs; UPSERT is
             # the create-if-absent verb) — empty table is a no-op
-            empty = self.spark.createDataFrame([], "id string")
+            empty = local_frame(self.spark, [], "id string")
             if capture is not None:
                 capture["before"], capture["after"] = empty, empty
             return empty
@@ -786,7 +807,7 @@ class Database:
         td = self.tables[tbl]
         if not self._exists(tbl):
             # deleting from an empty table is a no-op (doc/delete.rs)
-            empty = self.spark.createDataFrame([], "id string")
+            empty = local_frame(self.spark, [], "id string")
             if capture is not None:
                 capture["before"] = empty
             return empty

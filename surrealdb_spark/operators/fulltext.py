@@ -177,11 +177,15 @@ def _bm25_over(
         .orderBy(F.desc("score"), F.asc("doc"))
         .limit(k)
     )
-    from pyspark.sql import Window as W
-
-    return ranked.withColumn(
-        "rank",
-        F.row_number().over(W.orderBy(F.desc("score"), F.asc("doc"))),
+    # rank the <= k rows as one sorted array instead of a global window:
+    # ascending (-score, doc) is the (score desc, doc asc) order, and
+    # negating a double is exact
+    top = ranked.agg(F.sort_array(F.collect_list(
+        F.struct((-F.col("score")).alias("neg"), "doc"))).alias("top"))
+    return top.select(F.posexplode("top").alias("pos", "t")).select(
+        F.col("t.doc").alias("doc"),
+        (-F.col("t.neg")).alias("score"),
+        (F.col("pos") + 1).alias("rank"),
     )
 
 

@@ -30,6 +30,8 @@ from contextlib import contextmanager
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from surrealdb_spark.session import local_frame
+
 IN, OUT = "in", "out"
 # Reference default recursion cap (core/src/cnf/mod.rs:53-54).
 RECURSION_LIMIT = 256
@@ -326,8 +328,8 @@ def recurse(
             for v in (v_state, v_edges, v_nxt):
                 spark.catalog.dropTempView(v)
     if not steps:
-        return start.sparkSession.createDataFrame(
-            [], "start string, node string, depth int"
+        return local_frame(
+            start.sparkSession, [], "start string, node string, depth int"
         )
     out = steps[0]
     for s in steps[1:]:
@@ -574,8 +576,9 @@ def recurse_paths(
             )
         frontier = nxt
     if not steps:
-        return start.sparkSession.createDataFrame(
-            [], "start string, node string, depth int, path string"
+        return local_frame(
+            start.sparkSession, [],
+            "start string, node string, depth int, path string"
         )
     out = steps[0]
     for s in steps[1:]:

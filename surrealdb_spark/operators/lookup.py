@@ -33,6 +33,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from surrealdb_spark.session import local_frame
+
 SEP = "\x01"  # sorts below every printable char → correct (ft, fk) order
 
 
@@ -253,7 +255,7 @@ def _edge_segment(fr, cat, dirn, tables, opts, params, want_row,
     if not hops:
         sc = fr.sparkSession
         schema = "__rk string, __ord string, __eid string, __ein string, __eout string"
-        return sc.createDataFrame([], schema)
+        return local_frame(sc, [], schema)
     hop = hops[0]
     for h in hops[1:]:
         hop = hop.unionByName(h)
@@ -1007,7 +1009,7 @@ def _driver_chain_recurse(df: DataFrame, cat, slot: str, base, rng, instr,
                     f"{RECURSION_LIMIT}.")
         out_rows.append((r["__rk"], node if depth >= lo_eff else None))
 
-    res = spark.createDataFrame(out_rows, f"__rk string, `{slot}` string")
+    res = local_frame(spark, out_rows, f"__rk string, `{slot}` string")
     return df.join(res, df["id"] == res["__rk"], "left").drop("__rk")
 
 
@@ -1168,8 +1170,8 @@ def recurse_value(df: DataFrame, cat, slot: str, base, rng, instr, steps,
                 .select("__rk", "__node", "__ord", "__depth")
             )
         elif not levels or reached < max(lo, 1):
-            rows = spark.createDataFrame(
-                [], "__rk string, __node string, __ord string, __depth int")
+            rows = local_frame(
+                spark, [], "__rk string, __node string, __ord string, __depth int")
         else:
             rows = levels[-1].select("__rk", "__node", "__ord", "__depth")
         out = _nest_nodes(df, cat, slot, rows, steps, trailing_field,
@@ -1193,8 +1195,8 @@ def recurse_value(df: DataFrame, cat, slot: str, base, rng, instr, steps,
                 F.lit("").alias("__ord"), F.lit(0).alias("__depth"))
             parts = [base_rows] + parts
         if not parts:
-            rows = spark.createDataFrame(
-                [], "__rk string, __node string, __ord string, __depth int")
+            rows = local_frame(
+                spark, [], "__rk string, __node string, __ord string, __depth int")
         else:
             rows = parts[0]
             for p in parts[1:]:
@@ -1247,8 +1249,8 @@ def recurse_value(df: DataFrame, cat, slot: str, base, rng, instr, steps,
                 "__rk", "__ord", "__path", "__depth")
             hits = h if hits is None else hits.unionByName(h)
         if hits is None:
-            hits = spark.createDataFrame(
-                [], "__rk string, __ord string, __path array<string>, "
+            hits = local_frame(
+                spark, [], "__rk string, __ord string, __path array<string>, "
                     "__depth int")
         hits = hits.localCheckpoint(eager=True)
         if hits.isEmpty() and not unbounded and levels:

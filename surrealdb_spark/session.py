@@ -8,8 +8,11 @@ coalescing/skew-join, Arrow transfers) — only master/memory change.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
+from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType, _make_type_verifier
 
 
 def get_spark(
@@ -84,3 +87,31 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Any],
+                schema: StructType | str | None = None) -> DataFrame:
+    """A DataFrame over driver-side rows: the only way a Python list becomes
+    a frame in this engine.
+
+    Same schema inference, verification and DDL parsing as
+    ``spark.createDataFrame(rows, schema)``, but the parallelized pickles
+    are unpickled in the JVM (``SerDeUtil.pythonToJava``).
+    ``createDataFrame`` instead re-serializes them through a Python ``map``
+    (``parallelize``'s batch serializer differs from the one ``_pickled``
+    asks for), so every job over the frame starts one Python worker task
+    per partition."""
+    rows = list(rows)
+    if isinstance(schema, str):
+        schema = spark._parse_ddl(schema)
+    if isinstance(schema, StructType):
+        verify = _make_type_verifier(schema)
+        for r in rows:
+            verify(r)
+    rdd, struct = spark._createFromLocal(rows, schema)
+    jvm = spark._jvm
+    jrdd = jvm.SerDeUtil.toJavaArray(jvm.SerDeUtil.pythonToJava(rdd._jrdd, True))
+    df = DataFrame(spark._jsparkSession.applySchemaToPythonRDD(
+        jrdd.rdd(), struct.json()), spark)
+    df._schema = struct
+    return df

@@ -22,6 +22,7 @@ from surrealdb_spark.expr import operators as O
 from surrealdb_spark.expr.idiom import compile_idiom
 from surrealdb_spark.functions import geometry as GEO
 from surrealdb_spark.functions.registry import REGISTRY
+from surrealdb_spark.session import local_frame
 from surrealdb_spark.sql.parser import Select, parse_select
 
 
@@ -2392,11 +2393,11 @@ def compile_select(spark: SparkSession, sel: Select, sf_dir: str | None = None,
                             return [_rowify(e) for e in x]
                         return x
 
-                    outs.append(spark.createDataFrame(
-                        [_rowify(x) for x in plain]))
+                    outs.append(local_frame(
+                        spark, [_rowify(x) for x in plain]))
                 else:
-                    outs.append(spark.createDataFrame(
-                        [(x,) for x in plain]).toDF("value"))
+                    outs.append(local_frame(
+                        spark, [(x,) for x in plain]).toDF("value"))
             out = outs[0]
             for o in outs[1:]:
                 out = out.unionByName(o, allowMissingColumns=True)

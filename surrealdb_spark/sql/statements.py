@@ -23,6 +23,7 @@ from surrealdb_spark.catalog import Catalog
 from surrealdb_spark.dml import (Database, FieldDef, MutationError,
                                  TableDef)
 from surrealdb_spark.functions.geometry import GEOM_T as _GEOM_T
+from surrealdb_spark.session import local_frame
 from surrealdb_spark.sql.parser import Parser, Select, _parse_select_body
 
 
@@ -3101,7 +3102,7 @@ class StatementRunner:
             if self.db._exists(name):
                 e = self.db.table(name)
             else:
-                e = spark.createDataFrame([], "`in` string, `out` string")
+                e = local_frame(spark, [], "`in` string, `out` string")
             here, there = ("in", "out") if d1 == "out" else ("out", "in")
             return e.select(F.col(here).cast("string").alias("__src"),
                             F.col(there).cast("string").alias("__dst"))
@@ -3153,7 +3154,7 @@ class StatementRunner:
             if self.db._exists(tbl):
                 t = self.db.table(tbl)
             else:
-                t = spark.createDataFrame([], "id string")
+                t = local_frame(spark, [], "id string")
             cur = t.select(F.col("id").cast("string").alias("id"),
                            *[(F.col(f) if f in t.columns else F.lit(None))
                              .alias(f"__d_{f}")
@@ -3472,8 +3473,8 @@ class StatementRunner:
                                 return [_rowify(e) for e in x]
                             return x
 
-                        lit_df = self.spark.createDataFrame(
-                            [(_rowify(val),)]).toDF(fname)
+                        lit_df = local_frame(
+                            self.spark, [(_rowify(val),)]).toDF(fname)
                         df = df.crossJoin(F.broadcast(lit_df))
                 else:
                     df = df.withColumn(
@@ -4877,7 +4878,7 @@ class StatementRunner:
                         "<" not in (fd.dtype or "") else None
                     cols.append(f"`{fd.name}` {dt or 'string'}")
                 self.catalog.register(
-                    name, self.spark.createDataFrame([], ", ".join(cols))
+                    name, local_frame(self.spark, [], ", ".join(cols))
                 )
         self.catalog.edge_names = edge_names
         for vname, (vast, _vtext) in self.view_defs.items():
@@ -4886,7 +4887,7 @@ class StatementRunner:
             except Exception:
                 # a view over a not-yet-existing source reads as empty
                 self.catalog.register(
-                    vname, self.spark.createDataFrame([], "id string"))
+                    vname, local_frame(self.spark, [], "id string"))
 
     def _view_frame(self, vname: str, vast) -> DataFrame:
         """`DEFINE TABLE v AS SELECT ...` read frame: the view's SELECT
@@ -6076,7 +6077,7 @@ class StatementRunner:
                 where = None if stmt.where is None else self._expr(stmt.where, {})
                 stream = live_select(self.spark, root, where, stmt.fields, ddl)
             self.live_queries[uid] = start_live(stream, qname)
-            return self.spark.createDataFrame([(uid,)], "id string")
+            return local_frame(self.spark, [(uid,)], "id string")
         if isinstance(stmt, ShowChangesStmt):
             from surrealdb_spark.streaming.changefeed import show_changes
 
@@ -6684,7 +6685,7 @@ class StatementRunner:
         self.db.update(tbl, set_exprs, F.col("id") == rid, "NONE")
 
         def _plain(v):
-            # createDataFrame's pickler chokes on list/dict SUBCLASSES
+            # the JVM unpickler (local_frame) chokes on list/dict SUBCLASSES
             # (SetVal) — coerce to the base containers
             if isinstance(v, list):
                 return [_plain(x) for x in v]
@@ -7221,16 +7222,18 @@ class StatementRunner:
         if forced:
             from pyspark.sql import types as T
 
-            sample = self.spark.createDataFrame(
+            # the inference local_frame(data) would run, minus the
+            # forced fields
+            fields = list(self.spark._inferSchemaFromList(
                 [{k: v for k, v in d.items() if k not in forced}
-                 for d in data]) if len(forced) < len(keys) else None
-            fields = list(sample.schema.fields) if sample is not None else []
+                 for d in data]).fields) if len(forced) < len(keys) else []
             fields += [T.StructField(k, t) for k, t in forced.items()]
             schema = T.StructType(sorted(fields, key=lambda f: f.name))
-            return self.spark.createDataFrame(
+            return local_frame(
+                self.spark,
                 [tuple(d[f.name] for f in schema.fields) for d in data],
                 schema)
-        return self.spark.createDataFrame(data)
+        return local_frame(self.spark, data)
 
     def _insert_ignore_filter(self, tbl: str, df: DataFrame) -> DataFrame:
         """Drop rows an INSERT IGNORE must skip: existing ids and rows
@@ -7819,7 +7822,7 @@ class StatementRunner:
             # empty/undefined-table image, schema `id` only): the
             # reference returns [] — zero rows, nothing to project
             if df.isEmpty():
-                return df.sparkSession.createDataFrame([], "value string")
+                return local_frame(df.sparkSession, [], "value string")
             raise
 
 

@@ -181,7 +181,7 @@ class NanoDatetime(_dt.datetime):
         return out
 
 
-try:  # createDataFrame type inference looks types up by EXACT class
+try:  # local_frame schema inference looks types up by EXACT class
     from pyspark.sql import types as _pst
 
     _pst._type_mappings[NanoDatetime] = _pst.TimestampType

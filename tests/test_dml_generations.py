@@ -15,14 +15,19 @@ reads).  Contract under test:
 - disk stays bounded: after N writes only the live and previous
   generations remain, plus what an open savepoint or a VERSION entry pins;
 - REMOVE TABLE drops the manifest entry; a re-DEFINE starts empty and
-  generation numbers keep counting up.
+  generation numbers keep counting up;
+- ``table``/``table_at`` serve one cached lazy scan per generation: a
+  repeat read launches no Spark job, a write or GC moves to a new entry,
+  and the cache never outgrows the referenced generations.
 """
 
 import json
 import os
 import time
+import uuid
 
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from surrealdb_spark import get_spark
@@ -152,3 +157,82 @@ def test_versioned_table_keeps_every_version(spark, tmp_path):
         time.sleep(0.01)
     assert [db.table_at("vt", m).first().v for m in marks] == [0, 1, 2, 3, 4]
     assert db.table("vt").first().v == 5
+
+
+def _jobs(spark, fn):
+    """``fn()`` and the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"scan-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "scan cache probe")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_repeat_table_read_is_one_cached_scan(spark, tmp_path):
+    _db(spark, tmp_path)
+    db = Database(spark, str(tmp_path))  # reopen: an empty scan cache
+    db.define_table(TableDef("t"))
+    first, n_first = _jobs(spark, lambda: db.table("t"))
+    again, n_again = _jobs(spark, lambda: db.table("t"))
+    assert n_first >= 1  # the footer-reading schema job
+    assert again is first and n_again == 0
+    db.update("t", {"v": F.col("v") + 1})
+    after = db.table("t")
+    assert after is not first
+    assert sorted(r.v for r in after.collect()) == [2, 3, 4]
+    assert sorted(r.v for r in first.collect()) == [1, 2, 3]
+
+
+def test_scan_cache_bounded_by_referenced_generations(spark, tmp_path):
+    db = _db(spark, tmp_path)
+    for _ in range(20):
+        db.update("t", {"v": F.col("v") + 1})
+    on_disk = {f"{db.root}/t/{g}" for g in _gens(db, "t")}
+    assert set(db._scans) <= on_disk and len(db._scans) <= len(on_disk) <= 2
+
+
+def test_rollback_serves_the_pinned_scan(spark, tmp_path):
+    db = _db(spark, tmp_path)
+    sp = db.savepoint()
+    pinned = db.table("t")
+    for _ in range(3):
+        db.update("t", {"v": F.lit(0)})
+    db.rollback(sp)
+    assert db.table("t") is pinned
+    assert sorted(r.v for r in db.table("t").collect()) == [1, 2, 3]
+
+
+def test_table_at_returns_cached_scans(spark, tmp_path):
+    db = Database(spark, str(tmp_path))
+    db.define_table(TableDef("vt", versioned=True))
+    db.create("vt", spark.createDataFrame([("vt:1", 0)], "id string, v int"))
+    mark = time.time_ns() // 1_000_000
+    time.sleep(0.01)
+    db.update("vt", {"v": F.lit(1)})
+    old = db.table_at("vt", mark)
+    again, n = _jobs(spark, lambda: db.table_at("vt", mark))
+    assert again is old and n == 0 and old.first().v == 0
+    live = db.table_at("vt", time.time_ns() // 1_000_000 + 1000)
+    assert live is db.table("vt") and live.first().v == 1
+
+
+def test_self_join_of_cached_scans(spark, tmp_path):
+    db = Database(spark, str(tmp_path))
+    db.define_table(TableDef("p"))
+    db.create("p", spark.createDataFrame(
+        [("p:1", "p:2"), ("p:2", None)], "id string, boss string"))
+    a, b = db.table("p"), db.table("p")
+    assert a is b
+    # one frame on both sides: Spark refuses the ambiguous column
+    # references instead of silently joining id#1 with itself
+    with pytest.raises(AnalysisException):
+        a.join(b, a["id"] == b["boss"]).collect()
+    # aliased sides and string keys work as over any shared scan
+    pairs = (a.alias("x").join(b.alias("y"), F.col("x.id") == F.col("y.boss"))
+             .select(F.col("y.id").alias("emp"), F.col("x.id").alias("mgr"))
+             .collect())
+    assert [(r.emp, r.mgr) for r in pairs] == [("p:1", "p:2")]
+    assert a.join(b.select("id"), "id").count() == 2
